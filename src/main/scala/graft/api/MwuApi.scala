@@ -87,14 +87,14 @@ object MwuApi {
   /** Canonical split-relation input (FIXTURES.md §1): fact
     * `cells(obs_id, feature_id, value)` + dimension `obs(obs_id, grp)`.
     * Validates the partition-of-groups invariant (reference
-    * _utils.py:47-51), joins the labels onto the fact (the obs table is
+    * _utils.py:47-51) and uniform feature counts in one pre-flight
+    * collect, joins the labels onto the fact (the obs table is
     * n_obs-sized — broadcast when it fits, else a shuffle join on
     * obs_id), and runs the pipeline. */
   def rankGeneGroupsFromObs(spark: SparkSession, cells: DataFrame, obs: DataFrame,
                             cfg: Pipeline.Config = Pipeline.Config(),
                             broadcastObs: Boolean = true): DataFrame = {
-    Validation.requirePartition(obs)
-    Validation.requireUniformFeatures(cells)
+    Validation.requirePartitionAndUniform(obs, cells)
     val dim = if (broadcastObs) broadcast(obs) else obs
     val joined = cells.join(dim, "obs_id")
       .select(col("grp"), col("feature_id"), col("value"))

@@ -22,17 +22,25 @@ object LogFold {
 
   /** Per (feature, grp): mu1 (group mean), mu2 (rest mean). */
   def groupMeans(cells: DataFrame, valueCol: String = "value"): DataFrame = {
+    val wFeat = Window.partitionBy("feature_id")
     val agg = cells.groupBy("feature_id", "grp")
       .agg(sum(valueCol).as("s1"), count(lit(1)).as("c1"))
-    val wFeat = Window.partitionBy("feature_id")
-    agg
-      .withColumn("tot", sum("s1").over(wFeat))
-      .withColumn("n", sum("c1").over(wFeat))
-      .withColumn("mu1", col("s1") / col("c1"))
+    withMeans(agg.withColumn("tot", sum("s1").over(wFeat))
+      .withColumn("n", sum("c1").over(wFeat)))
+  }
+
+  /** mu1/mu2 over a (feature, grp) frame with the group's value sum `s1`
+    * and size `countCol`, and the feature's value total `tot` and size
+    * `n` — [[groupMeans]]'s derivation, shared with
+    * [[MwuAgg.markerSums]]'s aggregate. */
+  def withMeans(sums: DataFrame, countCol: String = "c1"): DataFrame = {
+    val c1 = col(countCol)
+    sums
+      .withColumn("mu1", col("s1") / c1)
       // single-group input has an empty "rest": NaN mean (the reference
       // rejects all-true masks up front; ANSI-safe here)
-      .withColumn("mu2", when(col("n") > col("c1"),
-        (col("tot") - col("s1")) / (col("n") - col("c1"))).otherwise(lit(Double.NaN)))
+      .withColumn("mu2", when(col("n") > c1,
+        (col("tot") - col("s1")) / (col("n") - c1)).otherwise(lit(Double.NaN)))
   }
 
   /** M4 on a frame with mu1/mu2. `base=None` in the reference means the

@@ -25,6 +25,28 @@ object MwuAgg {
     agg.withColumn("n", sum("n1").over(Window.partitionBy("feature_id")))
   }
 
+  /** A1–A4 in one pass over a ranked frame (grp, feature_id, value,
+    * rank, tie_count) — the marker pipeline's only fact aggregate, read
+    * off one rank relation like the reference's one rank tensor
+    * (rank_data.py:292-315). Per (feature, grp): `rank_sum`, `n1`, the
+    * value sum `s1` and the tie part Σ(tie_count² − 1) over non-null,
+    * non-NaN cells; one per-feature window then adds `n`, `tie_term`
+    * and the value total `tot`. A tie group of t cells contributes
+    * t·(t² − 1) = t³ − t, so `tie_term` equals [[tieTerm]] exactly
+    * (BIGINT), and `rank_sum`/`n1`/`n` equal [[rankSums]] over the same
+    * frame; `s1`/`tot` feed [[LogFold.withMeans]]. */
+  def markerSums(ranked: DataFrame): DataFrame = {
+    val wFeat = Window.partitionBy("feature_id")
+    val tc = col("tie_count")
+    ranked.groupBy("feature_id", "grp")
+      .agg(sum("rank").as("rank_sum"), count(lit(1)).as("n1"), sum("value").as("s1"),
+        sum(when(!Ranking.isBad(col("value")), tc * tc - 1L)).as("tie_part"))
+      .select(col("feature_id"), col("grp"), col("rank_sum"), col("n1"), col("s1"),
+        sum("n1").over(wFeat).as("n"),
+        coalesce(sum("tie_part").over(wFeat), lit(0L)).as("tie_term"),
+        sum("s1").over(wFeat).as("tot"))
+  }
+
   /** A1+A3 WITHOUT sorting the fact table — the tied-data scale path.
     * Average ranks are a pure function of distinct (feature, value)
     * cumulative counts, so the fact rows collapse through a map-side-
@@ -77,15 +99,16 @@ object MwuAgg {
       .withColumn("off", coalesce(sum("bc").over(wOff), lit(0L)))
       .withColumn("f_nan", max(col("p_nan")).over(wFeat))
       .select("feature_id", "vb", "off", "f_nan")
-    // NULL-SAFE on vb: a null value buckets to null, and its cells must
-    // keep flowing (n1/n stay populated while only the ranks null out)
+    // NULL-SAFE on both keys: a null value buckets to null, and its cells
+    // must keep flowing (n1/n stay populated while only the ranks null
+    // out); a null feature id is its own feature
     val btA = bt.withColumnRenamed("feature_id", "bt_f")
       .withColumnRenamed("vb", "bt_vb")
     cv
       .withColumn("lcum", sum("c").over(wCum))
       .withColumn("t", sum("c").over(wPeer))
       .join(broadcast(btA),
-        col("feature_id") === col("bt_f") && col("vb") <=> col("bt_vb"))
+        col("feature_id") <=> col("bt_f") && col("vb") <=> col("bt_vb"))
       .drop("bt_f", "bt_vb")
       .withColumn("cum", col("off") + col("lcum"))
       .withColumn("avg_rank", when(col("f_nan"), lit(null).cast("double"))

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.oracle.Parity
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** M1–M3 + A5 — Mann–Whitney U, tie-corrected z, two-sided p, and
@@ -41,12 +41,18 @@ object MwuStats {
     * exactly like the reference's errstate-ignored division (pvals.py:57-58). */
   def withZ(uStats: DataFrame, tieTerm: DataFrame, broadcastTies: Boolean = true): DataFrame = {
     val tt = if (broadcastTies) broadcast(tieTerm) else tieTerm
+    withZTied(uStats.join(tt, Seq("feature_id"), "left")
+      .withColumn("tie_term", coalesce(col("tie_term"), lit(0L))))
+  }
+
+  /** [[withZ]] over U statistics that already carry `tie_term` (e.g.
+    * from [[MwuAgg.markerSums]]). */
+  def withZTied(uStats: DataFrame): DataFrame =
     // Explicit zero-denominator branches: the reference relies on numpy's
     // errstate-ignored IEEE semantics (pvals.py:57-58); Spark 4 defaults
     // to ANSI mode which would throw instead, so the IEEE outcomes
     // (sigma=0 → z=±inf, 0/0 → NaN, n<2 → NaN sigma) are spelled out.
-    uStats.join(tt, Seq("feature_id"), "left")
-      .withColumn("tie_term", coalesce(col("tie_term"), lit(0L)))
+    uStats
       .withColumn("mu_u", col("n1") * col("n2") / 2.0)
       .withColumn("sigma", when(col("n") > 1, sqrt(
         col("n1") * col("n2") / 12.0 *
@@ -63,7 +69,6 @@ object MwuStats {
           .when(col("z_num") < 0.0, lit(Double.NegativeInfinity))
           .otherwise(lit(Double.NaN))))
       .drop("z_num")
-  }
 
   /** Two-sided p = min(1, erfc(z/√2)) — single-sourced snippet. Null z
     * (NaN-poisoned feature) keeps a null p: Spark's `least` skips nulls
@@ -90,47 +95,50 @@ object MwuStats {
     * (pvals.py:128-141, via statsmodels fdr_bh). Pure windows:
     *   i = ascending p rank, m = #features, raw = p·m/i,
     *   p_adj = min(1, suffix-min of raw) — order-insensitive among tied
-    *   p's (suffix-min absorbs intra-tie ordering; SURVEY.md §7.5). */
+    *   p's (suffix-min absorbs intra-tie ordering; SURVEY.md §7.5).
+    * Null/NaN p rows (NaN-poisoned and n<2 features, SURVEY §1.2) keep
+    * their p and take no part: they sort after every valid row, `m`
+    * counts valid rows only and the suffix-min reads valid rows only, so
+    * both engines and the reference agree without relying on either
+    * engine's null ordering. The window is partitioned by `grp` alone,
+    * so it shares its exchange with [[MarkerTable.topK]]'s. */
   def withBH(pStats: DataFrame, pCol: String = "p", outCol: String = "p_adj"): DataFrame = {
-    // null/NaN p rows (NaN-poisoned features, SURVEY §1.2) are excluded
-    // from the BH windows entirely: partitioning on the validity flag keeps
-    // them out of bh_i/bh_m AND out of every valid row's suffix-min frame
-    // (Spark sorts null first / NaN last, DuckDB null last — excluding them
-    // makes both engines and the reference agree without relying on either
-    // engine's null ordering).
-    val wOrd = Window.partitionBy("grp", "bh_valid").orderBy(col(pCol), col("feature_id"))
-    val wAll = Window.partitionBy("grp", "bh_valid")
-    val wSuffix = wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    pStats
-      .withColumn("bh_valid", col(pCol).isNotNull && !isnan(col(pCol)))
-      .withColumn("bh_i", row_number().over(wOrd).cast("long"))
-      .withColumn("bh_m", count(lit(1)).over(wAll))
-      .withColumn(outCol, when(col(pCol).isNull, lit(null).cast("double"))
-        .when(isnan(col(pCol)), lit(Double.NaN))
-        .otherwise(
-          least(lit(1.0), min(col(pCol) * col("bh_m") / col("bh_i")).over(wSuffix))))
-      .drop("bh_i", "bh_m", "bh_valid")
+    val suffix = pOrder(pCol).rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    adjusted(pStats, pCol, outCol, least(lit(1.0),
+      min(onValid(col(pCol) * col("bh_m") / col("bh_i"))).over(suffix)))
   }
 
   /** Holm step-DOWN correction — the FWER sibling of [[withBH]]'s FDR
     * step-up: p_holm(i) = min(1, max_{j≤i} (m−j+1)·p_(j)) over the valid
-    * rows in (p, feature_id) order. Same NaN/null exclusion discipline;
+    * rows in (p, feature_id) order. Same window and null/NaN discipline;
     * prefix-max instead of suffix-min, per-rank factor instead of m/i.
     * Monotone ≥ the BH value by construction (FWER dominates FDR) —
     * PropertySpec pins it. */
   def withHolm(pStats: DataFrame, pCol: String = "p", outCol: String = "p_holm"): DataFrame = {
-    val wOrd = Window.partitionBy("grp", "bh_valid").orderBy(col(pCol), col("feature_id"))
-    val wAll = Window.partitionBy("grp", "bh_valid")
-    val wPrefix = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val prefix = pOrder(pCol).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    adjusted(pStats, pCol, outCol, least(lit(1.0),
+      max(onValid(col(pCol) * (col("bh_m") - col("bh_i") + 1L).cast("double"))).over(prefix)))
+  }
+
+  /** Per `grp`, valid rows first, in (p, feature_id) order. */
+  private def pOrder(pCol: String): WindowSpec =
+    Window.partitionBy("grp").orderBy(col("bh_invalid"), col(pCol), col("feature_id"))
+
+  private def onValid(c: Column): Column = when(!col("bh_invalid"), c)
+
+  /** Adds `outCol` = `adj` on valid rows (null p stays null, NaN p stays
+    * NaN), with `bh_i` (rank among the group's valid rows) and `bh_m`
+    * (the group's valid row count) in scope for `adj`. */
+  private def adjusted(pStats: DataFrame, pCol: String, outCol: String, adj: Column): DataFrame = {
+    val p = col(pCol)
     pStats
-      .withColumn("bh_valid", col(pCol).isNotNull && !isnan(col(pCol)))
-      .withColumn("bh_i", row_number().over(wOrd).cast("long"))
-      .withColumn("bh_m", count(lit(1)).over(wAll))
-      .withColumn(outCol, when(col(pCol).isNull, lit(null).cast("double"))
-        .when(isnan(col(pCol)), lit(Double.NaN))
-        .otherwise(least(lit(1.0),
-          max(col(pCol) * (col("bh_m") - col("bh_i") + 1L).cast("double")).over(wPrefix))))
-      .drop("bh_i", "bh_m", "bh_valid")
+      .withColumn("bh_invalid", p.isNull || isnan(p))
+      .withColumn("bh_i", row_number().over(pOrder(pCol)).cast("long"))
+      .withColumn("bh_m", count(onValid(lit(1))).over(Window.partitionBy("grp")))
+      .withColumn(outCol, when(p.isNull, lit(null).cast("double"))
+        .when(isnan(p), lit(Double.NaN))
+        .otherwise(adj))
+      .drop("bh_i", "bh_m", "bh_invalid")
   }
 
   /** DuckDB mirror of [[withHolm]] (the [[bhSql]] pattern). */

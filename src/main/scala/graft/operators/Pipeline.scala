@@ -6,11 +6,16 @@ import org.apache.spark.sql.functions._
 /** End-to-end marker-stats pipeline — the Spark rendering of
   * `rank_gene_groups_vec` (/root/reference/scratch/rank_gene_groups.py:261-309).
   *
-  * Plan shape (SURVEY.md §3.1 "Spark trace"): exactly two heavy shuffles —
-  * hash by `feature_id` for the rank windows, hash by (feature_id, grp) for
-  * the aggregates; tie-term and lfc-mean frames are feature×group sized and
-  * joined broadcast/AQE. Nothing is collected to the driver (the reference
-  * crosses a `.compute()` barrier per stage).
+  * Plan shape: one pass over the ranked cells. The rank windows ride one
+  * fact shuffle on (feature_id, value bucket) (their bucket offsets are a
+  * feature×bucket-sized broadcast); one (feature_id, grp) aggregate then
+  * reads the rank sums, group sizes, value sums and tie term off that one
+  * rank relation ([[MwuAgg.markerSums]]), and one per-feature window adds
+  * the feature totals. Everything after is feature×group sized: U/z/p and
+  * the fold change are row-local, and BH and top-k are windows that share
+  * one exchange on `grp`. No fact table is scanned twice and nothing is
+  * collected to the driver (the reference crosses a `.compute()` barrier
+  * per stage).
   *
   * Checkpoint (S5/S7, rank_gene_groups.py:219-252): the rank stage is the
   * cost center ("HIGHLY recommended to save this data to disk",
@@ -25,6 +30,9 @@ object Pipeline {
       checkpointDir: Option[String] = None,
       recomputeRanks: Boolean = false)
 
+  /** The columns a rank checkpoint stores. */
+  val CheckpointCols: Seq[String] = Seq("grp", "feature_id", "value", "rank", "tie_count")
+
   /** Rank stage with the reference's cache-or-compute gate. */
   def rankedCells(spark: SparkSession, cells: DataFrame, cfg: Config): DataFrame =
     cfg.checkpointDir match {
@@ -32,21 +40,25 @@ object Pipeline {
       case Some(dir) =>
         val path = new org.apache.hadoop.fs.Path(dir)
         val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (cfg.recomputeRanks || !fs.exists(path)) {
+        // a checkpoint without every stored column (the older rank+ties
+        // layout) is stale: it cannot feed the one-pass aggregate
+        val stored =
+          if (cfg.recomputeRanks || !fs.exists(path)) None
+          else Some(spark.read.parquet(dir)).filter(df => CheckpointCols.forall(df.columns.contains))
+        stored.getOrElse {
           // One write, pre-partitioned by feature hash — the reference's
           // write-then-rechunk-then-rewrite double pass (S5) collapses to a
-          // single repartitioned write (SURVEY.md §2.1). Stored planes
-          // mirror the reference's rank tensor exactly: ranks + tie sizes
-          // (rank_data.py:201), keyed by (grp, feature) — not the raw
-          // values, which downstream stages re-scan from the source.
+          // single repartitioned write (SURVEY.md §2.1). Stored planes: the
+          // reference's rank tensor (ranks + tie sizes, rank_data.py:201),
+          // keyed by (grp, feature), plus the values, so a checkpointed run
+          // never re-scans the source cells.
           // (A round-robin repartition before the write was tried to undo
           // the few-features skew at small SF; the extra 4M-row shuffle
           // cost more than the skewed write saved.)
-          Ranking.withRanks(cells)
-            .select("grp", "feature_id", "rank", "tie_count")
+          Ranking.withRanks(cells).select(CheckpointCols.map(col): _*)
             .write.mode("overwrite").parquet(dir)
+          spark.read.parquet(dir) // column pruning replaces zarr plane slicing
         }
-        spark.read.parquet(dir) // column pruning replaces zarr plane slicing
     }
 
   /** Full pipeline: cells(grp, feature_id, value) → marker stats
@@ -54,17 +66,12 @@ object Pipeline {
     * `cells` values are assumed log1p-transformed for the lfc leg, as in
     * the reference (conftest.py:11). */
   def markerStats(spark: SparkSession, cells: DataFrame, cfg: Config = Config()): DataFrame = {
-    val ranked = rankedCells(spark, cells, cfg)
-    val stats = MwuStats.withBH(
-      MwuStats.withP(
-        MwuStats.withZ(MwuStats.withU(MwuAgg.rankSums(ranked)), MwuAgg.tieTerm(cells))))
-    val lfc = LogFold.withLfc(LogFold.groupMeans(cells), cfg.base)
-      .select("feature_id", "grp", "lfc", "abs_lfc")
-    val joined = stats.join(lfc, Seq("feature_id", "grp"))
+    val sums = MwuAgg.markerSums(rankedCells(spark, cells, cfg))
+    val stats = MwuStats.withBH(MwuStats.withP(MwuStats.withZTied(MwuStats.withU(sums))))
+    val withLfc = LogFold.withLfc(LogFold.withMeans(stats, countCol = "n1"), cfg.base)
       .select(col("grp"), col("feature_id").as("gene"), col("u1").as("U"),
         col("p").as("p_value"), col("p_adj").as("p_adjusted"),
-        col("lfc").as("logfoldchange"), col("abs_lfc").as("abs_logfoldchange"))
-    MarkerTable.topK(joined.withColumn("abs_lfc", col("abs_logfoldchange")), cfg.topN)
-      .drop("abs_lfc")
+        col("lfc").as("logfoldchange"), col("abs_lfc").as("abs_logfoldchange"), col("abs_lfc"))
+    MarkerTable.topK(withLfc, cfg.topN).drop("abs_lfc")
   }
 }

@@ -31,6 +31,12 @@ object Ranking {
 
   def isBad(c: Column): Column = c.isNull || isnan(c)
 
+  /** Working columns the split [[withRanks]] adds and drops again. An
+    * input that already has one is rejected: the split would shadow it,
+    * or fail on an ambiguous reference, instead of ranking the caller's
+    * data. */
+  val SplitWorkingCols: Seq[String] = Seq("_vb", "_lrk", "_off", "_f_nan", "_bt_f", "_bt_vb")
+
   /** Adds `rank` (DOUBLE, null on NaN-poisoned features), `tie_count`
     * (LONG), `feature_has_nan` (BOOLEAN) to a cells-like frame.
     *
@@ -69,6 +75,10 @@ object Ranking {
             .otherwise(col("min_rank") + (col("tie_count") - 1L) / 2.0))
         .drop("min_rank")
     } else {
+      SplitWorkingCols.find(w => cells.columns.exists(_.equalsIgnoreCase(w))).foreach { w =>
+        throw new IllegalArgumentException(
+          s"Ranking.withRanks: input column '$w' clashes with a working column; rename it")
+      }
       graft.functions.GraftFunctions.register(cells.sparkSession)
       val withVb = cells.withColumn("_vb", expr(s"double_sort_bucket(`$valueCol`)"))
       val wOrd = Window.partitionBy(featureCol, "_vb").orderBy(v)
@@ -76,8 +86,9 @@ object Ranking {
       val wOff = Window.partitionBy(featureCol).orderBy("_vb")
         .rowsBetween(Window.unboundedPreceding, -1)
       // bucket offsets + the feature NaN flag: feature×bucket-sized,
-      // broadcast; NULL-SAFE on the bucket (null values bucket to null
-      // and must keep flowing — only their ranks null out)
+      // broadcast; NULL-SAFE on both keys (null values bucket to null and
+      // must keep flowing — only their ranks null out; a null feature id
+      // is its own feature, as in the single-window spelling)
       val bt = withVb.groupBy(featureCol, "_vb")
         .agg(count(lit(1)).as("_bc"), max(isBad(v)).as("_p_nan"))
         .withColumn("_off", coalesce(sum("_bc").over(wOff), lit(0L)))
@@ -89,7 +100,7 @@ object Ranking {
         .withColumn("tie_count", count(lit(1)).over(wPeers))
         .withColumn("_lrk", rank().over(wOrd).cast("long"))
         .join(broadcast(bt),
-          col(featureCol) === col("_bt_f") && col("_vb") <=> col("_bt_vb"))
+          col(featureCol) <=> col("_bt_f") && col("_vb") <=> col("_bt_vb"))
         .withColumn("feature_has_nan", col("_f_nan"))
         .withColumn("rank",
           when(col("feature_has_nan"), lit(null).cast("double"))

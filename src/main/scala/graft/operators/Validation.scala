@@ -43,6 +43,32 @@ object Validation {
       "all features must have the same number of observations")
   }
 
+  /** [[requirePartition]] on `obs` and [[requireUniformFeatures]] on
+    * `cells`, answered "all clear" by one collect: obs rows, labelled
+    * rows and distinct ids must agree, and the per-feature observation
+    * counts must have one value. Only a check this flags runs in full, so
+    * a rejection throws the same exception with the same example row, and
+    * an input the summary cannot clear on its own (a single null obs id
+    * is flagged here but is a valid partition) still passes. */
+  def requirePartitionAndUniform(obs: DataFrame, cells: DataFrame,
+                                 idCol: String = "obs_id", groupCol: String = "grp",
+                                 featureCol: String = "feature_id"): Unit = {
+    val obsRow = obs.agg(lit("obs").as("src"), count(lit(1)).as("a"),
+      count(col(groupCol)).as("b"), countDistinct(col(idCol)).as("c"))
+    val cellsRow = cells.groupBy(featureCol).agg(count(lit(1)).as("n_obs"))
+      .agg(lit("cells").as("src"), min("n_obs").as("a"), max("n_obs").as("b"),
+        lit(0L).as("c"))
+    // one row per side, tagged by `src`: a union, because a cross join
+    // of the two one-row frames would add a broadcast exchange
+    val rows = obsRow.unionByName(cellsRow).collect().map(r => r.getString(0) -> r).toMap
+    val o = rows("obs")
+    if (o.getLong(1) != o.getLong(2) || o.getLong(2) != o.getLong(3))
+      requirePartition(obs, idCol, groupCol)
+    val c = rows("cells")
+    if (!c.isNullAt(1) && c.getLong(1) != c.getLong(2))
+      requireUniformFeatures(cells, featureCol)
+  }
+
   /** vars/matrix length consistency (reference
     * scratch/rank_gene_groups.py:118-133): the gene-name table must cover
     * exactly the features present. */

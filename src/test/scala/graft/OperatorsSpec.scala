@@ -41,6 +41,28 @@ class OperatorsSpec extends SparkSpec {
     Validation.requireTopN(Some(2), 2L)
   }
 
+  test("validation in one pre-flight collect: same rejections, flagged-but-valid input passes") {
+    val cells = Seq((0L, "f1", 1.0), (1L, "f1", 2.0), (0L, "f2", 1.0), (1L, "f2", 3.0))
+      .toDF("obs_id", "feature_id", "value")
+    val ok = Seq((0L, "a"), (1L, "b")).toDF("obs_id", "grp")
+    Validation.requirePartitionAndUniform(ok, cells)
+    val dup = Seq((0L, "a"), (0L, "b"), (1L, "a")).toDF("obs_id", "grp")
+    val nul = Seq((0L, "a"), (1L, null)).toDF("obs_id", "grp")
+    val ragged = cells.filter(!($"feature_id" === "f2" && $"obs_id" === 1L))
+    Seq((dup, cells, "exactly one group"), (nul, cells, "must belong to a group"),
+      (ok, ragged, "same number of observations")).foreach { case (o, c, msg) =>
+      val fast = intercept[Validation.ValidationException](Validation.requirePartitionAndUniform(o, c))
+      val detailed = intercept[Validation.ValidationException] {
+        Validation.requirePartition(o); Validation.requireUniformFeatures(c)
+      }
+      assert(fast.getMessage == detailed.getMessage && fast.getMessage.contains(msg), fast.getMessage)
+    }
+    // one null obs_id: rows ≠ distinct ids flags it, the detailed check accepts it
+    val nullId = Seq((Some(0L), "a"), (None, "b")).toDF("obs_id", "grp")
+    Validation.requirePartition(nullId)
+    Validation.requirePartitionAndUniform(nullId, cells)
+  }
+
   test("topK: per-group limit, deterministic tie-break, topN=None keeps all (create_df.py:109-134)") {
     val df = Seq(("g1", "a", 2.0), ("g1", "b", 2.0), ("g1", "c", 1.0), ("g2", "d", 5.0))
       .toDF("grp", "gene", "abs_lfc")

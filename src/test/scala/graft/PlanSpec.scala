@@ -30,6 +30,19 @@ class PlanSpec extends SparkSpec {
       s"expected the (feature_id, _vb) window exchange:\n$p")
   }
 
+  test("markerStats: one fact aggregate, and BH and top-k share ONE grp exchange") {
+    val p = plan(graft.operators.Pipeline.markerStats(spark,
+      QueriesMwu.liCells(spark, sf("sf0.001")), graft.operators.Pipeline.Config(topN = Some(3))))
+    // rank windows (feature, bucket) + their bucket offsets (feature,
+    // bucket → feature, broadcast), the (feature, grp) aggregate, the
+    // per-feature window, and the grp exchange of BH and top-k
+    assert("Exchange".r.findAllIn(p).length == 7, s"expected 7 exchanges, plan:\n$p")
+    assert("Exchange hashpartitioning\\(grp#\\d+, \\d+\\)".r.findAllIn(p).length == 1, p)
+    assert("Exchange hashpartitioning".r.findAllIn(p).length == 6, p)
+    assert(p.contains("WindowGroupLimit"), p)
+    assert(!p.contains("SortMergeJoin"), p)
+  }
+
   test("marker pipeline broadcasts the feature-sized side tables") {
     val p = plan(SparkEntry.queries("mwu_markers")(spark, sf("sf0.001")))
     assert(p.contains("BroadcastHashJoin"), p)

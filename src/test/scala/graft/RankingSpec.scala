@@ -56,4 +56,28 @@ class RankingSpec extends SparkSpec {
     }
     assert(results(0) == results(1) && results(1) == results(2))
   }
+
+  test("a NULL feature id ranks as its own feature in the split spelling, as in the unsplit one") {
+    import spark.implicits._
+    val cells = Seq(("a", Some("f"), 2.0), ("b", Some("f"), 1.0), ("a", None, 5.0),
+      ("b", None, 3.0), ("a", None, 3.0)).toDF("grp", "feature_id", "value")
+    def ranks(split: Boolean) = Ranking.withRanks(cells, bucketSplit = split)
+      .select("feature_id", "value", "rank", "tie_count").collect()
+      .map(r => (Option(r.getString(0)), r.getDouble(1), r.getDouble(2), r.getLong(3))).toSet
+    assert(ranks(split = true) == ranks(split = false))
+    assert(ranks(split = true).filter(_._1.isEmpty) ==
+      Set((None, 5.0, 3.0, 1L), (None, 3.0, 1.5, 2L), (None, 3.0, 1.5, 2L)))
+    val sums = MwuAgg.rankSumsAgg(cells).filter($"feature_id".isNull)
+      .select("grp", "rank_sum", "n1", "n").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3))).toSet
+    assert(sums == Set(("a", 4.5, 2L, 3L), ("b", 1.5, 1L, 3L)))
+  }
+
+  test("an input column that clashes with a working column is rejected by name") {
+    Ranking.SplitWorkingCols.foreach { w =>
+      val cells = cellsOf("f", Seq(1.0, 2.0), Seq("a", "b")).withColumn(w, lit(1L))
+      val e = intercept[IllegalArgumentException](Ranking.withRanks(cells))
+      assert(e.getMessage.contains(s"'$w'"), e.getMessage)
+    }
+  }
 }
